@@ -415,10 +415,19 @@ def _bench_only():
     }
 
 
+def _sf_of(sf_dir: str) -> float:
+    """Scale factor from a fixture directory's ``sf…`` suffix
+    (``/data/sf0.1`` → 0.1); -1.0 when there is no numeric suffix."""
+    try:
+        return float(sf_dir.rstrip("/").rsplit("sf", 1)[1])
+    except (IndexError, ValueError):
+        return -1.0
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    sf = _sf_of(sf_dir)
 
     from skopje_spark.queries import load_all
     from skopje_spark.session import get_spark
@@ -451,7 +460,7 @@ def main() -> None:
             with open("/proc/stat") as fh:
                 vals = [int(x) for x in fh.readline().split()[1:]]
             return vals[7] if len(vals) > 7 else 0, sum(vals)
-        except OSError:  # non-Linux: field rides as null
+        except (OSError, ValueError, IndexError):  # non-Linux/odd format: null
             return None
 
     steal_start = _cpu_steal_snapshot()
@@ -514,13 +523,8 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     extra = {}
     if sf2_dir:
-        sf2 = (
-            float(sf2_dir.rstrip("/").rsplit("sf", 1)[-1])
-            if "sf" in sf2_dir
-            else -1.0
-        )
         extra = {
-            "sf2": sf2,
+            "sf2": _sf_of(sf2_dir),
             "queries_sf2": timings2,
             "run_spread_sf2": spreads2,
         }

@@ -472,10 +472,11 @@ def minhash_signatures(
     t = _shingles_raw(df, id_col, text_col, 3).select(
         F.col(id_col), _token_hash(F.col("shingle")).alias("h")
     )
+    # SQL text, not Column trees: the same expressions (INT coefficient
+    # times BIGINT hash, BIGINT modulus), at one py4j parse per
+    # aggregate instead of ~5 calls — a fixed cost every probe pays
     aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(
-            f"mh{i}"
-        )
+        F.expr(f"min(({a} * h + {b}) % {MINHASH_PRIME}) AS mh{i}")
         for i, (a, b) in enumerate(MINHASH_COEFFS)
     ]
     return t.groupBy(id_col).agg(*aggs)
@@ -491,24 +492,19 @@ def band_rows(sig: DataFrame, id_col: str) -> DataFrame:
     (:func:`lsh_index_write`), so the band layout cannot diverge
     between the two paths."""
     rows_per_band = len(MINHASH_COEFFS) // LSH_BANDS
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band_id"),
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"mh{band * rows_per_band + j}").cast("string")
-                        for j in range(rows_per_band)
-                    ],
-                ).alias("band_sig"),
-            )
-            for band in range(LSH_BANDS)
-        ]
+    # SQL text: one parse instead of a ~60-call Column tree per probe
+    band_structs = ", ".join(
+        f"struct({band} AS band_id, concat_ws(',', "
+        + ", ".join(
+            f"CAST(mh{band * rows_per_band + j} AS STRING)"
+            for j in range(rows_per_band)
+        )
+        + ") AS band_sig)"
+        for band in range(LSH_BANDS)
     )
-    return sig.select(F.col(id_col), F.explode(band_structs).alias("b")).select(
-        F.col(id_col), F.col("b.band_id"), F.col("b.band_sig")
-    )
+    return sig.select(
+        F.col(id_col), F.expr(f"explode(array({band_structs})) AS b")
+    ).select(F.col(id_col), F.col("b.band_id"), F.col("b.band_sig"))
 
 
 def minhash_lsh_pairs(
@@ -1462,13 +1458,13 @@ def _lsh_geometry_digest() -> str:
     return hashlib.sha256(blob).hexdigest()[:16]
 
 
-def _read_geometry_local(path: str) -> set | None:
-    """Driver-local fast path for the per-probe geometry check: the
-    meta table is one tiny parquet file, and reading it through a
-    Spark job costs a full job submission (~100 ms of driver latency
-    on every probe). When the path is a plain local directory, read
-    it with pyarrow directly; any miss (non-local path, layout
-    surprise) falls back to the Spark read."""
+def _read_meta_local(path: str) -> list[dict] | None:
+    """Driver-local fast path for the per-probe meta read: the meta
+    table is one tiny parquet file, and reading it through a Spark job
+    costs a full job submission (~100 ms of driver latency on every
+    probe). When the path is a plain local directory, read it with
+    pyarrow directly; any miss (non-local path, layout surprise) falls
+    back to the Spark read."""
     import glob as _glob
     import os as _os
 
@@ -1481,19 +1477,23 @@ def _read_geometry_local(path: str) -> set | None:
             return None
         import pyarrow.parquet as _pq
 
-        vals: set = set()
+        rows: list[dict] = []
         for f in files:
-            vals.update(_pq.read_table(f, columns=["geometry"]) ["geometry"].to_pylist())
-        return vals or None
+            rows.extend(_pq.read_table(f).to_pylist())
+        return rows or None
     except Exception:
         return None
 
 
-def _lsh_check_geometry(spark, path: str) -> None:
-    got = _read_geometry_local(path)
-    if got is None:
-        meta = spark.read.parquet(f"{path}/meta").collect()
-        got = {r["geometry"] for r in meta}
+def _lsh_check_meta(spark, path: str) -> str | None:
+    """Validate the index's hash geometry and return the id column's
+    recorded Spark type (DDL, e.g. ``bigint``) — None for an index
+    written before the type was recorded, whose tables are then read
+    with schema inference."""
+    rows = _read_meta_local(path)
+    if rows is None:
+        rows = [r.asDict() for r in spark.read.parquet(f"{path}/meta").collect()]
+    got = {r["geometry"] for r in rows}
     want = _lsh_geometry_digest()
     if got != {want}:
         raise ValueError(
@@ -1501,6 +1501,8 @@ def _lsh_check_geometry(spark, path: str) -> None:
             f"current library geometry is {want} — rebuild the index or pin "
             "the MINHASH_COEFFS/LSH_BANDS the index was created with"
         )
+    id_types = {r.get("id_type") for r in rows}
+    return id_types.pop() if len(id_types) == 1 else None
 
 
 def lsh_index_write(
@@ -1509,7 +1511,9 @@ def lsh_index_write(
     """Build a persisted near-dup index of the corpus: MinHash
     signatures (``path/sigs``: id, mh0..mh15) plus their banded view
     (``path/bands``: id, band_id, band_sig, partitioned by band_id),
-    plus a one-row geometry meta. One shingle pass over the corpus —
+    plus a one-row meta: the hash geometry and the id column's type,
+    from which every probe reads both tables with an explicit schema
+    (no inference job). One shingle pass over the corpus —
     every later :func:`lsh_index_probe` touches only these narrow
     tables (~LSH_BANDS rows × ~30 B per document, independent of
     document length), never the corpus text again."""
@@ -1517,9 +1521,10 @@ def lsh_index_write(
     sig.write.mode("overwrite").parquet(f"{path}/sigs")
     bands = band_rows(sig, "id")
     bands.write.mode("overwrite").partitionBy("band_id").parquet(f"{path}/bands")
+    id_type = df.schema[id_col].dataType.simpleString()
     df.sparkSession.createDataFrame(
-        [(_lsh_geometry_digest(), len(MINHASH_COEFFS), LSH_BANDS)],
-        "geometry string, n_hashes int, n_bands int",
+        [(_lsh_geometry_digest(), len(MINHASH_COEFFS), LSH_BANDS, id_type)],
+        "geometry string, n_hashes int, n_bands int, id_type string",
     ).write.mode("overwrite").parquet(f"{path}/meta")
 
 
@@ -1540,7 +1545,7 @@ def lsh_index_append(
     read time — the same read-side idempotence the sketch state sinks
     use)."""
     spark = df.sparkSession
-    _lsh_check_geometry(spark, path)
+    _lsh_check_meta(spark, path)
     sig = minhash_signatures(df, id_col, text_col).withColumnRenamed(id_col, "id")
     sig.write.mode("append").parquet(f"{path}/sigs")
     band_rows(sig, "id").write.mode("append").partitionBy("band_id").parquet(
@@ -1573,9 +1578,16 @@ def lsh_index_probe(
     bucket join in this module. ``exclude_same_id`` drops pairs whose
     ids are equal — the re-ingest case where the batch overlaps the
     corpus itself; disable when batch and corpus ids are from
-    different namespaces."""
+    different namespaces.
+
+    Fixed per-probe cost: the meta is read driver-side, both index
+    tables are read with the id type it records (no schema-inference
+    job), and a batch below the AQE partition-size floor is not
+    round-robin widened (:func:`skopje_spark.tables.ensure_parallelism`),
+    so building the frame runs only the batch-signature checkpoint
+    (at most 2 jobs)."""
     spark = batch.sparkSession
-    _lsh_check_geometry(spark, path)
+    id_type = _lsh_check_meta(spark, path)
     n_hashes = len(MINHASH_COEFFS)
 
     # eager checkpoint: the signature frame feeds BOTH the band
@@ -1588,20 +1600,20 @@ def lsh_index_probe(
         eager=True
     )
     bands_b = band_rows(sig_b, id_col)
-    # explicit schema, derived from the sigs table (which persists a
-    # schema-bearing file even when empty): an index built on an empty
-    # corpus — the streaming-from-zero shape — has a bands directory
-    # with no data files, where schema inference would fail
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    sigs_raw = spark.read.parquet(f"{path}/sigs")
-    bands_schema = StructType(
-        [
-            sigs_raw.schema["id"],
-            StructField("band_id", IntegerType()),
-            StructField("band_sig", StringType()),
-        ]
-    )
+    # explicit schemas from the id type the meta records: no schema-
+    # inference job per probe, and an index built on an empty corpus —
+    # the streaming-from-zero shape — has a bands directory with no
+    # data files, where inference would fail. An index written before
+    # the type was recorded takes it from the sigs table (which
+    # persists a schema-bearing file even when empty).
+    if id_type is None:
+        sigs_raw = spark.read.parquet(f"{path}/sigs")
+        id_type = sigs_raw.schema["id"].dataType.simpleString()
+    else:
+        sigs_raw = spark.read.schema(
+            f"id {id_type}, " + ", ".join(f"mh{i} bigint" for i in range(n_hashes))
+        ).parquet(f"{path}/sigs")
+    bands_schema = f"id {id_type}, band_id int, band_sig string"
     # NO index-side pre-dedup: at-least-once append replays duplicate
     # whole rows in bands/sigs, but the candidate-level .distinct()
     # below collapses duplicate band hits, and replayed sig rows are
@@ -1644,23 +1656,22 @@ def lsh_index_probe(
     if exclude_same_id:
         cand = cand.filter(F.col(id_col) != F.col("index_id"))
 
-    sigs_i = sigs_raw.select(
-        F.col("id").alias("index_id"),
-        *[F.col(f"mh{i}").alias(f"imh{i}") for i in range(n_hashes)],
+    # projections as SQL text (one py4j parse each, not a Column tree
+    # of ~5 calls per hash)
+    sigs_i = sigs_raw.selectExpr(
+        "id AS index_id", *[f"mh{i} AS imh{i}" for i in range(n_hashes)]
     )
-    n_match = sum(
-        F.when(F.col(f"mh{i}") == F.col(f"imh{i}"), 1).otherwise(0)
-        for i in range(n_hashes)
-    ).cast("int")
+    n_match = " + ".join(
+        f"CASE WHEN mh{i} = imh{i} THEN 1 ELSE 0 END" for i in range(n_hashes)
+    )
     return (
         cand.join(_b(sig_b), id_col)
         .join(sigs_i, "index_id")
-        .withColumn("n_match", n_match)
+        .withColumn("n_match", F.expr(f"CAST({n_match} AS INT)"))
         # k/n_hashes is a dyadic rational for the 16-hash family —
         # exact in binary, deterministic across engines unrounded
-        .withColumn(
-            "est_jaccard", F.col("n_match") / F.lit(float(n_hashes))
-        )
+        # (the D suffix keeps it DOUBLE: a bare 16.0 is a SQL decimal)
+        .withColumn("est_jaccard", F.expr(f"n_match / {n_hashes}D"))
         .filter(F.col("n_match") >= int(threshold * n_hashes))
         .select(id_col, "index_id", "n_match", "est_jaccard")
         # collapses the duplicate joined rows an at-least-once append

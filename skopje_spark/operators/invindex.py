@@ -14,12 +14,17 @@ from the postings of ITS terms alone:
   DENORMALIZED into every posting, so scoring touches no second
   corpus-sized table (the textbook posting-list trick);
 - ``_STATS.json`` — exact corpus statistics: document count and total
-  token count (avgdl derives), plus the layout/tokenizer contract.
+  token count (avgdl derives), plus the layout/tokenizer contract and
+  the id column's Spark type (the postings are read with that explicit
+  schema; an index written before the type was recorded infers it).
 
-Query cost: partition pruning on the query terms' buckets, a filter
-to the terms, one groupBy for per-term df, one groupBy for scores —
-everything sized by the query's postings. Corpus statistics are
-driver-side literals (kilobytes of JSON), not a broadcast job.
+Query cost: partition pruning on the query terms' buckets (literal
+partition filters — Catalyst folds the bucket hashes, no lookup job),
+a filter to the terms, one window for per-term df, one groupBy for
+scores — one postings scan, everything sized by the query's postings.
+Corpus statistics and the id column's type are driver-side literals
+(kilobytes of JSON), so building the query frame runs no job: no
+bucket lookup, no schema inference, no broadcast.
 
 APPEND stays EXACT, unlike the frozen-quantizer vector indexes
 (IVF/PQ appends go stale against their training sample): BM25's
@@ -101,6 +106,7 @@ def bm25_index_write(
         "n_buckets": int(n_buckets),
         "token_rule": _TOKEN_RULE,
         "id_col": id_col,
+        "id_type": df.schema[id_col].dataType.simpleString(),
     }
     _write_stats(path, stats)
     return stats
@@ -144,11 +150,13 @@ def bm25_index_query(
 ) -> DataFrame:
     """Serve a BM25 query from the persisted index: identical scoring
     (and identical 6-dp round + id tiebreak ordering) to
-    `bm25_scores` over the same corpus, at postings cost. The terms'
-    partition buckets are computed driver-side from the recorded
-    layout via one tiny local job, so the scan opens only those
-    ``pb=`` directories; corpus stats come from the JSON as literals
-    — no corpus-sized input anywhere in the plan."""
+    `bm25_scores` over the same corpus, at postings cost. The scan
+    opens only the query terms' ``pb=`` directories (Catalyst folds
+    the bucket hashes to literal partition filters), reads them with
+    the schema the stats record, and takes per-term df from a window
+    over that one scan; corpus stats come from the JSON as literals —
+    no corpus-sized input anywhere in the plan, and no job until the
+    caller collects."""
     import re as _re
 
     from skopje_spark.queries.rounding import dround
@@ -163,25 +171,26 @@ def bm25_index_query(
         raise ValueError("bm25_index_query: no usable query terms")
     terms = sorted(set(terms))
     # the terms' buckets, with Spark's own hash — the same function
-    # that wrote the layout, so pruning can't skew. Evaluated over
-    # literals on a OneRowRelation: Catalyst constant-folds the
-    # hashes and the collect never schedules a task, where the old
-    # createDataFrame(...).collect() paid a full 32-task job per
-    # query (terms are [a-z]+ by _TOKEN_RULE, safe to embed).
-    exprs = ", ".join(
+    # that wrote the layout, so pruning can't skew. Catalyst constant-
+    # folds the hashes into literal partition filters, so no lookup
+    # job runs (terms are [a-z]+ by _TOKEN_RULE, safe to embed).
+    buckets = ", ".join(
         f"pmod(hash('{t}'), {int(stats['n_buckets'])})" for t in terms
     )
-    buckets = sorted({int(v) for v in spark.sql(f"SELECT {exprs}").first()})
+    reader = spark.read
+    if "id_type" in stats:
+        reader = reader.schema(
+            f"tok string, id {stats['id_type']}, tf bigint, dl bigint, pb int"
+        )
     post = (
-        spark.read.parquet(os.path.join(path, "postings"))
-        .filter(F.col("pb").isin(buckets))
+        reader.parquet(os.path.join(path, "postings"))
+        .filter(F.expr(f"pb IN ({buckets})"))
         .filter(F.col("tok").isin(terms))
     )
-    df_t = post.groupBy("tok").agg(F.count(F.lit(1)).alias("df_t"))
     n_docs = float(stats["n_docs"])
     avgdl = stats["sum_dl"] / stats["n_docs"] if stats["n_docs"] else 1.0
     scored = (
-        post.join(F.broadcast(df_t), "tok")
+        post.withColumn("df_t", F.expr("count(*) OVER (PARTITION BY tok)"))
         .withColumn(
             "__idf",
             F.log((n_docs - F.col("df_t") + 0.5) / (F.col("df_t") + 0.5) + 1.0),

@@ -66,19 +66,6 @@ def attach_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def read_binary_dir(spark, path: str, pattern: str = "*") -> DataFrame:
-    """Binary/multimodal source: one row per file with (path,
-    modificationTime, length, content) — the engine's blob-ingestion
-    analog of the reference's download/unzip staging
-    (``/root/reference/src/extract/http.rs:74-124``,
-    ``/root/reference/src/extract/fs.rs:19-60``)."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .load(path)
-    )
-
-
 def decode_media_batch(payloads: pd.Series) -> pd.DataFrame:
     """STUB decode kernel — deterministic fake dimensions derived from
     the payload bytes (a real deployment would call PIL/ffmpeg here;

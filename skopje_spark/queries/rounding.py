@@ -102,11 +102,6 @@ def davg(col: Column, n: int = 2) -> Column:
     return dround(F.sum(col), n) / F.count(col)
 
 
-def davg_sql(expr: str, n: int = 2) -> str:
-    """SQL twin of :func:`davg`."""
-    return f"({dround_sql(f'SUM({expr})', n)} / COUNT({expr}))"
-
-
 def dround_np(arr, n: int = 6):
     """numpy twin of :func:`dround` — same round-half-away-from-zero,
     element-wise. One definition for every Arrow/pandas kernel so the

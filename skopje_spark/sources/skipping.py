@@ -348,25 +348,6 @@ def zorder_col(
     return z
 
 
-def zorder_sql(
-    col_exprs: list[str], ranges: list[tuple[int, int]], *, bits: int = 8
-) -> str:
-    """DuckDB expression for :func:`zorder_col` — generated from the
-    same ranges so both engines agree by construction."""
-    scale = (1 << bits) - 1
-    cell_sqls = []
-    for e, (lo, hi) in zip(col_exprs, ranges):
-        span = max(int(hi) - int(lo), 1)
-        raw = f"CAST(FLOOR((({e} - {int(lo)}) * {scale}) / {span}) AS BIGINT)"
-        cell_sqls.append(f"LEAST(GREATEST({raw}, 0), {scale})")
-    n = len(cell_sqls)
-    terms = []
-    for j in range(bits):
-        for i, cell in enumerate(cell_sqls):
-            terms.append(f"((({cell} >> {j}) & 1) << {j * n + i})")
-    return "(" + " + ".join(terms) + ")"
-
-
 def write_zordered(
     df: DataFrame, path: str, cols: list[str], *, n_files: int = 16, bits: int = 8
 ) -> None:

@@ -88,7 +88,8 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int = 32) -> DataFrame:
-    """Repartition iff the scan produced fewer partitions than cores.
+    """Repartition iff the input is worth spreading and the scan
+    produced fewer partitions than cores.
 
     Small dimension files (documents/embeddings fixtures are a few MB)
     arrive as a single input partition, which serializes CPU-heavy
@@ -96,7 +97,24 @@ def ensure_parallelism(df: DataFrame, min_partitions: int = 32) -> DataFrame:
     A round-robin repartition of a few MB costs nothing and unlocks
     full-core parallelism. At 100 TB inputs span thousands of files and
     this is a no-op (getNumPartitions is metadata-only, no job).
+
+    An input whose planner size estimate is below the session's AQE
+    ``coalescePartitions.minPartitionSize`` floor is returned as is: it
+    holds no per-row CPU worth spreading, and the round-robin would
+    add a shuffle (and a job) to every request over it — a probe batch
+    of a few documents is the case. When the estimate is unknown (an
+    RDD-backed frame reports Long.MaxValue) or unavailable, the
+    partition-count rule above decides.
     """
+    spark = df.sparkSession
+    try:
+        floor = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+        )
+        if int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()) < floor:
+            return df
+    except Exception:  # estimate unavailable: fall through
+        pass
     if df.rdd.getNumPartitions() < min_partitions:
         return df.repartition(min_partitions)
     return df

@@ -76,3 +76,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return TEST_SF_DIR
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` under a fresh job group and
+    returns ``(result, number of Spark jobs it launched)`` — job counts
+    are read after the listener bus drains, so none is missed."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        tag = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(tag, tag)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    return run

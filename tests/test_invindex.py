@@ -3,6 +3,11 @@ append-exactness vs the direct scorer, layout pruning, stats folding."""
 
 from __future__ import annotations
 
+import json
+import os
+import re
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -99,3 +104,77 @@ def test_index_compact_defragments_without_changing_results(spark, tmp_path):
     ]
     assert after == before
     assert bm25_index_stats(path)["n_docs"] == 6  # stats untouched
+
+
+def _local_docs(spark, rows):
+    """A pandas-built frame: a LocalRelation the planner can size, so
+    a few documents take the tiny-input lane of ensure_parallelism."""
+    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
+    return spark.createDataFrame(pdf, "doc_id long, text string")
+
+
+_SMALL = [
+    (1, "alpha table scan merge table"),
+    (2, "window stream alpha alpha"),
+    (3, "table merge beta"),
+]
+
+
+def _scores(df):
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
+def test_fast_lane_query_equals_bm25_scores(spark, tmp_path):
+    """On a 3-document corpus the query equals the direct scorer, with
+    the scorer's repartition skipped (tiny input) and forced (floor at
+    1b); terms absent from the index return no rows."""
+    d = _local_docs(spark, _SMALL)
+    path = str(tmp_path / "idx")
+    assert bm25_index_write(d, path, n_buckets=4)["id_type"] == "bigint"
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    old = spark.conf.get(key)
+    for q in (["table", "alpha"], ["merge", "window", "beta"], ["scan"]):
+        got = _scores(bm25_index_query(spark, path, q, top_k=10))
+        assert got == _scores(bm25_scores(d, q, top_k=10)), q
+        spark.conf.set(key, "1b")
+        try:
+            assert got == _scores(bm25_scores(d, q, top_k=10)), q
+        finally:
+            spark.conf.set(key, old)
+    assert bm25_index_query(spark, path, ["zeta"]).collect() == []
+
+
+def test_query_of_index_without_recorded_id_type(spark, tmp_path):
+    """An index whose stats predate the recorded id type reads its
+    postings with schema inference and scores identically."""
+    d = _local_docs(spark, _SMALL).selectExpr("CAST(doc_id AS INT) AS doc_id", "text")
+    path = str(tmp_path / "idx")
+    bm25_index_write(d, path, n_buckets=4)
+    q = ["table", "alpha", "beta"]
+    typed = bm25_index_query(spark, path, q)
+    want = _scores(typed)
+    stats_path = os.path.join(path, "_STATS.json")
+    with open(stats_path) as f:
+        stats = json.load(f)
+    assert stats.pop("id_type") == "int"
+    with open(stats_path, "w") as f:
+        json.dump(stats, f)
+    legacy = bm25_index_query(spark, path, q)
+    assert legacy.schema == typed.schema
+    assert _scores(legacy) == want == _scores(bm25_scores(d, q))
+
+
+def test_query_job_budget(spark, tmp_path, count_jobs):
+    """Building the query frame runs no job (bucket hashes folded into
+    partition filters, schema from the stats); collecting runs at most
+    3 (per-term df window, score aggregate, result)."""
+    path = str(tmp_path / "idx")
+    bm25_index_write(_local_docs(spark, _SMALL), path, n_buckets=4)
+    df, built = count_jobs(lambda: bm25_index_query(spark, path, ["table", "alpha"]))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # the hashes are folded: the scan prunes on literal buckets
+    assert re.search(r"PartitionFilters: \[pb#\d+ IN \([\d,]+\)\]", plan), plan
+    rows, ran = count_jobs(df.collect)
+    assert [r["doc_id"] for r in rows] == [1, 2, 3]
+    assert built == 0, f"query build ran {built} jobs"
+    assert ran <= 3, f"query collect ran {ran} jobs"

@@ -4,6 +4,9 @@ lsh_index_probe)."""
 
 from __future__ import annotations
 
+import contextlib
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +15,7 @@ from skopje_spark.operators.dedup import (
     lsh_index_probe,
     lsh_index_write,
     minhash_lsh_pairs,
+    minhash_signatures,
 )
 
 LOREM = (
@@ -28,6 +32,40 @@ OTHER = (
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _local_docs(spark, rows):
+    """A pandas-built frame: a LocalRelation the planner can size, so
+    a few documents take the tiny-input lane of ensure_parallelism
+    (a list-built frame is RDD-backed and reports an unknown size)."""
+    pdf = pd.DataFrame(
+        {
+            "doc_id": pd.Series([r[0] for r in rows], dtype="int64"),
+            "text": pd.Series([r[1] for r in rows], dtype=object),
+        }
+    )
+    return spark.createDataFrame(pdf, "doc_id long, text string")
+
+
+@contextlib.contextmanager
+def _min_partition_size(spark, value):
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _widened(df) -> bool:
+    """Whether the batch signature plan round-robins its input."""
+    plan = minhash_signatures(df, "doc_id", "text")._jdf.queryExecution()
+    return "RoundRobinPartitioning" in plan.executedPlan().toString()
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
 
 
 def test_probe_finds_planted_near_dup(spark, tmp_path):
@@ -340,3 +378,102 @@ def test_crawl_ingest_stream_dedups_across_batches(spark, tmp_path):
     kept2 = {r["doc_id"] for r in spark.read.parquet(f"{out}/data").collect()}
     assert kept2 == kept
     assert spark.read.parquet(f"{out}/_batch_ledger").count() == 3
+
+
+@pytest.mark.parametrize("exclude_same_id", [True, False])
+def test_fast_lane_probe_equals_forced_repartition(spark, tmp_path, exclude_same_id):
+    """A few-document batch skips ensure_parallelism's round-robin (it
+    is below the AQE partition-size floor); forcing the floor to 1b
+    restores the repartition. Both lanes return the same rows, and the
+    re-ingested corpus id follows ``exclude_same_id`` in each."""
+    corpus = _local_docs(
+        spark, [(1, LOREM), (2, OTHER), (3, LOREM + " with an appended tail")]
+    )
+    path = str(tmp_path / "idx")
+    lsh_index_write(corpus, path)
+    batch = _local_docs(
+        spark, [(1, LOREM), (10, LOREM.replace("lazy dog", "sleepy dog"))]
+    )
+
+    def probe():
+        return _rows(lsh_index_probe(batch, path, exclude_same_id=exclude_same_id))
+
+    assert not _widened(batch)
+    fast = probe()
+    with _min_partition_size(spark, "1b"):
+        assert _widened(batch)
+        forced = probe()
+    assert fast == forced
+    assert {(10, 1), (10, 3), (1, 3)} <= {(r[0], r[1]) for r in fast}
+    self_pairs = [r for r in fast if r[0] == r[1]]
+    assert self_pairs == ([] if exclude_same_id else [(1, 1, 16, 1.0)])
+
+
+def test_fast_lane_empty_batch(spark, tmp_path):
+    path = str(tmp_path / "idx")
+    lsh_index_write(_local_docs(spark, [(1, LOREM), (2, OTHER)]), path)
+    out = lsh_index_probe(_local_docs(spark, []), path)
+    assert out.collect() == []
+    assert out.schema.simpleString() == (
+        "struct<doc_id:bigint,index_id:bigint,n_match:int,est_jaccard:double>"
+    )
+
+
+def test_fast_lane_replayed_append(spark, tmp_path):
+    """At-least-once replay of an append through the explicit-schema
+    reads: duplicated index rows never change the probe output."""
+    path = str(tmp_path / "idx")
+    lsh_index_write(_local_docs(spark, [(1, LOREM)]), path)
+    extra = _local_docs(spark, [(2, OTHER), (3, LOREM.replace("summer", "winter"))])
+    batch = _local_docs(spark, [(30, LOREM), (31, OTHER + " slightly changed")])
+    assert lsh_index_append(extra, path) == 2
+    once = _rows(lsh_index_probe(batch, path))
+    lsh_index_append(extra, path)  # replay
+    assert _rows(lsh_index_probe(batch, path)) == once
+    assert {(30, 1), (30, 3), (31, 2)} <= {(r[0], r[1]) for r in once}
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_probe_of_index_without_recorded_id_type(spark, tmp_path, id_type):
+    """The meta records the id column's type and the probe reads sigs
+    and bands with it; an index written before the type was recorded
+    (meta without ``id_type``) falls back to schema inference and
+    probes identically."""
+    from skopje_spark.operators.dedup import _lsh_geometry_digest
+
+    rows = [(1, LOREM), (2, OTHER), (3, LOREM + " with an appended tail")]
+    cast = f"CAST(doc_id AS {id_type}) AS doc_id"
+    corpus = _local_docs(spark, rows).selectExpr(cast, "text")
+    batch = _local_docs(spark, [(1, LOREM), (10, OTHER)]).selectExpr(cast, "text")
+    path = str(tmp_path / "idx")
+    lsh_index_write(corpus, path)
+    assert spark.read.parquet(f"{path}/meta").first()["id_type"] == id_type
+    typed = lsh_index_probe(batch, path, exclude_same_id=False)
+    assert typed.schema["index_id"].dataType.simpleString() == id_type
+    want = _rows(typed)
+
+    spark.createDataFrame(
+        [(_lsh_geometry_digest(), 16, 4)], "geometry string, n_hashes int, n_bands int"
+    ).write.mode("overwrite").parquet(f"{path}/meta")
+    legacy = lsh_index_probe(batch, path, exclude_same_id=False)
+    assert legacy.schema == typed.schema
+    assert _rows(legacy) == want
+    key = str if id_type == "string" else int
+    pairs = {(key(a), key(b)) for a, b in [(1, 1), (1, 3), (10, 2)]}
+    assert pairs <= {(r[0], r[1]) for r in want}
+
+
+def test_probe_job_budget(spark, tmp_path, count_jobs):
+    """Fixed per-probe cost: building the probe frame runs only the
+    batch-signature checkpoint (no schema inference, no round-robin of
+    a tiny batch); the whole probe stays within 7 jobs."""
+    path = str(tmp_path / "idx")
+    lsh_index_write(_local_docs(spark, [(1, LOREM), (2, OTHER)]), path)
+    batch = _local_docs(
+        spark, [(10, LOREM.replace("lazy dog", "sleepy dog")), (11, OTHER)]
+    )
+    df, built = count_jobs(lambda: lsh_index_probe(batch, path))
+    rows, ran = count_jobs(df.collect)
+    assert {(r["doc_id"], r["index_id"]) for r in rows} == {(10, 1), (11, 2)}
+    assert built <= 2, f"probe build ran {built} jobs"
+    assert built + ran <= 7, f"probe ran {built} + {ran} jobs"
